@@ -1,15 +1,11 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
 
-import graft.canon.Canonicalizer
-import graft.cc.ConnectedComponents
 import graft.extract.MentionExtractor
 import graft.link.Linker
 import graft.schema._
 import graft.snapshot.SnapshotStore
-import graft.superedge.SuperEdges
 import graft.synth.TranscriptSynth
 
 /**
@@ -24,16 +20,35 @@ import graft.synth.TranscriptSynth
  *     --output <snapshot root> [--threshold 0.65] [--dedup 0.9] \
  *     [--strip-boilerplate <minConvs>]
  *
- * Each stage is materialized as an immutable snapshot with per-
- * partition row counts in the manifest; a re-run resumes from the
- * last completed stage (the reference's user-selected step-range
+ * Each stage of the shared KG DAG ([[Pipeline.build]]) is materialized
+ * as an immutable snapshot with per-partition row counts in the
+ * manifest ([[Materializer.Snapshot]]); a re-run resumes from the last
+ * completed stage (the reference's user-selected step-range
  * restartability, /root/reference/update_kg/update_kg.py:17-35, made
  * automatic). Stage list mirrors Updater.run_all order (SURVEY §3.1).
  */
 object Main {
 
+  /** Every flag the CLI accepts; each takes one value. */
+  private val Flags: Seq[String] = Seq("input", "output", "threshold", "dedup", "strip-boilerplate")
+
+  private val Usage: String =
+    "usage: graft.Main [--input <parquet dir | synth:<nTurns>>] [--output <snapshot root>] " +
+      "[--threshold <cosine>] [--dedup <jaccard>] [--strip-boilerplate <minConvs>]"
+
+  /** `--flag value` pairs. An unknown flag, a stray argument or a flag
+    * without a value is an IllegalArgumentException: a mistyped option
+    * must not run with defaults that the snapshot fingerprint then
+    * records as chosen. */
   def parseArgs(args: Array[String]): Map[String, String] =
-    args.sliding(2, 2).collect { case Array(k, v) => k.stripPrefix("--") -> v }.toMap
+    args.grouped(2).map {
+      case Array(k, v) if k.startsWith("--") && Flags.contains(k.drop(2)) && !v.startsWith("--") =>
+        k.drop(2) -> v
+      case Array(k, _*) if k.startsWith("--") && Flags.contains(k.drop(2)) =>
+        throw new IllegalArgumentException(s"$k needs a value\n$Usage")
+      case Array(k, _*) =>
+        throw new IllegalArgumentException(s"unknown argument $k\n$Usage")
+    }.toMap
 
   def loadTurns(spark: SparkSession, input: String): Dataset[Turn] = {
     import spark.implicits._
@@ -66,22 +81,25 @@ object Main {
     } else spark.read.parquet(input).as[Turn]
   }
 
-  /** The tagged-union KE extraction frame over `turns` — the same
-    * single-flatMap shape Pipeline.run uses, exposed so the batch
-    * ([[runResumable]]) and streaming
-    * ([[graft.streaming.IncrementalKg]]) faces extract identically. */
+  /** The tagged-union KE extraction frame over `turns`: ONE
+    * extraction pass emitting a flat tagged row per KE (1 mention,
+    * 2 statement, 3 error, 4 event, 5 event arg), which
+    * [[Pipeline.build]] carves with columnar filter+project (no object
+    * round-trip, no second extraction pass, no nested Seq cache). The
+    * batch and streaming faces extract through this one function. */
   def extractKe(turns: Dataset[Turn]): DataFrame = {
     val spark = turns.sparkSession
     import spark.implicits._
     turns.flatMap { t =>
       val k = MentionExtractor.extractTurn(t)
-      k.mentions.iterator.map(m => (1, m, null: Statement, null: EventArg, null: String)).toSeq ++
-        k.statements.iterator.map(s => (2, null: Mention, s, null: EventArg, null: String)) ++
-        k.events.iterator.map(m => (4, m, null: Statement, null: EventArg, null: String)) ++
-        k.eventArgs.iterator.map(a => (5, null: Mention, null: Statement, a, null: String)) ++
-        (if (k.error != null)
-           Seq((3, null: Mention, null: Statement, null: EventArg, k.error))
-         else Nil)
+      val ms = k.mentions.iterator.map(m => (1, m, null: Statement, null: EventArg, null: String))
+      val ss = k.statements.iterator.map(s => (2, null: Mention, s, null: EventArg, null: String))
+      val evs = k.events.iterator.map(m => (4, m, null: Statement, null: EventArg, null: String))
+      val eas = k.eventArgs.iterator.map(a => (5, null: Mention, null: Statement, a, null: String))
+      val es = if (k.error != null)
+        Iterator((3, null: Mention, null: Statement, null: EventArg, k.error))
+      else Iterator.empty
+      (ms ++ ss ++ evs ++ eas ++ es).toSeq
     }.toDF("tag", "m", "s", "a", "error")
   }
 
@@ -98,6 +116,7 @@ object Main {
       s"|maxBlock=${linkCfg.maxBlock}|minTokenLen=${linkCfg.minTokenLen}" +
       s"|dedup=${dedupJaccard.getOrElse("off")}" +
       s"|strip=${stripBoilerplateMinConvs.getOrElse("off")}"
+    val mat = new Materializer.Snapshot(spark, store, fp)
 
     // optional TURN-level boilerplate strip FIRST (cheapest filter,
     // and it sharpens the conversation near-dup signatures below by
@@ -106,7 +125,7 @@ object Main {
     // (tiny — distinct boilerplate norms), the filter an anti-join.
     val turnsStripped = stripBoilerplateMinConvs match {
       case Some(k) =>
-        val norms = store.getOrCreate(spark, "boilerplate_norms", fp) {
+        val norms = mat.stage("boilerplate_norms") {
           graft.ops.Clean.boilerplateTurnNorms(turns, k)
         }
         graft.ops.Clean.stripTurnsByNorms(turns, norms)
@@ -120,109 +139,27 @@ object Main {
     // the fingerprint carries the threshold so toggling recomputes).
     val turnsIn = dedupJaccard match {
       case Some(thr) =>
-        val verdicts = store.getOrCreate(spark, "dedup_canon", fp) {
+        val verdicts = mat.stage("dedup_canon") {
           graft.ops.ConversationDedup.conversationClusters(turnsStripped, thr)
         }
         graft.ops.ConversationDedup.canonicalTurns(turnsStripped, verdicts)
       case None => turnsStripped
     }
 
-    val ke = store.getOrCreate(spark, "ke", fp)(extractKe(turnsIn))
-    kgStages(spark, ke, store, fp, linkCfg)
-  }
-
-  /** Every stage DOWNSTREAM of extraction, from the tagged KE frame to
-    * the triples — shared verbatim by the batch resume path (ke = one
-    * snapshot of the whole corpus) and the streaming incremental path
-    * (ke = the union of the append-log's delta snapshots; the caller
-    * keys `fp` to the log head so advancing the log recomputes and an
-    * idempotent re-fire resumes). Returns the triple count. */
-  def kgStages(spark: SparkSession, ke: DataFrame, store: SnapshotStore,
-      fp: String, linkCfg: Linker.Config): Long = {
-    import spark.implicits._
-    val mentions = ke.filter(col("tag") === 1).select(col("m.*")).as[Mention]
-    val statements = ke.filter(col("tag") === 2).select(col("s.*")).as[Statement]
-    val events = ke.filter(col("tag") === 4).select(col("m.*")).as[Mention]
-    val eventArgs = ke.filter(col("tag") === 5).select(col("a.*"))
-
-    val surf = store.getOrCreate(spark, "surfaces", fp)(Linker.surfaces(mentions))
-    val edges = store.getOrCreate(spark, "match_edges", fp) {
-      // reuse the surfaces snapshot instead of recomputing it
-      Linker.matchEdgesFrom(surf, linkCfg).toDF()
-    }
-    val comp = store.getOrCreate(spark, "components", fp)(ConnectedComponents.run(edges))
-    val surfClusters = store.getOrCreate(spark, "surface_clusters", fp) {
-      Canonicalizer.withKind(Canonicalizer.surfaceClusters(surf, comp))
-    }
-    // the same dictionary-size gate Pipeline.run applies: broadcast
-    // hints only while the surface dictionary fits the broadcast
-    // threshold; above it, salted (memberships) / un-hinted shuffle
-    // (prototypes) paths
-    val dictFits = surfClusters.count() <= Pipeline.SaltedMembershipRows
-    val memberships = store.getOrCreate(spark, "memberships", fp) {
-      (if (dictFits) Canonicalizer.memberships(mentions, surfClusters)
-       else Canonicalizer.membershipsSalted(mentions, surfClusters)).toDF()
-    }.as[Membership]
-    val prototypes = store.getOrCreate(spark, "prototypes", fp) {
-      Canonicalizer.prototypes(mentions, surfClusters, broadcastDict = dictFits).toDF()
-    }.as[Prototype]
-    val superEdges = store.getOrCreate(spark, "superedges", fp) {
-      SuperEdges.superEdges(statements, memberships).toDF()
-    }.as[SuperEdge]
-    val triples = store.getOrCreate(spark, "triples", fp) {
-      SuperEdges.namedTriples(superEdges, prototypes).toDF()
-    }
-    // event coreference (the reference's aida:Event cluster kind,
-    // Updater.py:133) — after entity clustering, arguments resolve at
-    // cluster level
-    val eventClusters = store.getOrCreate(spark, "event_clusters", fp) {
-      graft.canon.EventCoref.keyedEvents(events, eventArgs, memberships)
-    }
-    store.getOrCreate(spark, "event_prototypes", fp) {
-      graft.canon.EventCoref.prototypes(eventClusters).toDF()
-    }
-    store.getOrCreate(spark, "event_cluster_justifications", fp) {
-      // same informative-justification rule, third cluster kind: event
-      // members are mentions with trigger spans
-      graft.canon.Justifications.informativeJustifications(
-        graft.canon.EventCoref.memberships(eventClusters), events)
-    }
-    // relation clusters + justification/link aggregation + copy-backs
-    // (reference run_all steps 6-8 and the proto/superedge
-    // justification inserts, Updater.py:222-256, sparqls.py:391-527)
-    store.getOrCreate(spark, "relation_clusters", fp) {
-      // superedge-count reuse: n_members comes from the superedges
-      // snapshot, so the statements⋈memberships² joins run once
-      graft.canon.RelationClusters.cluster(statements, memberships, superEdges)
-    }
-    store.getOrCreate(spark, "cluster_justifications", fp) {
-      graft.canon.Justifications.informativeJustifications(memberships, mentions)
-    }
-    store.getOrCreate(spark, "cluster_links", fp) {
-      graft.canon.Justifications.clusterLinks(memberships, mentions)
-    }
-    store.getOrCreate(spark, "proto_justifications", fp) {
-      graft.canon.Justifications.prototypeJustifications(memberships, mentions, prototypes)
-    }
-    // the two remaining reference copy-backs (proto_inf_just /
-    // proto_type_assertion_justi, sparqls.py:413-454) — emitted, not
-    // just implemented
-    store.getOrCreate(spark, "proto_inf_justifications", fp) {
-      graft.canon.Justifications.prototypeInformativeJustifications(
-        memberships, mentions, prototypes)
-    }
-    store.getOrCreate(spark, "proto_type_justifications", fp) {
-      graft.canon.Justifications.prototypeTypeAssertionJustifications(
-        memberships, mentions, prototypes)
-    }
-    store.getOrCreate(spark, "superedge_justifications", fp) {
-      graft.canon.Justifications.superEdgeJustifications(statements, memberships)
-    }
-    triples.count()
+    val r = Pipeline.build(mat.stage("ke")(extractKe(turnsIn)), mat, linkCfg)
+    val n = r.triples.count()
+    r.unpersist()
+    n
   }
 
   def main(args: Array[String]): Unit = {
-    val opts = parseArgs(args)
+    val opts =
+      try parseArgs(args)
+      catch {
+        case e: IllegalArgumentException =>
+          System.err.println(e.getMessage)
+          sys.exit(2)
+      }
     val input = opts.getOrElse("input", "synth:100000")
     val output = opts.getOrElse("output", "/tmp/graft-kg")
     val cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt

@@ -160,13 +160,13 @@ object Canonicalizer {
     * redundant. One dictionary join over mentions (broadcast under the
     * same `dictFits` gate callers thread to [[memberships]]), zero
     * mention-scale shuffles, identical rows: (member_id, cluster_id,
-    * mention conv/turn/span/conf/link_target). */
+    * mention etype/conv/turn/span/conf/link_target). */
   def annotatedMembers(mentions: Dataset[Mention], surfClusters: DataFrame,
       broadcastDict: Boolean = true): DataFrame =
     mentions.toDF()
       .join(dict(surfClusters, Seq(col("cluster_id")), broadcastDict), dictCond)
       .select(col("mention_id").as("member_id"), col("cluster_id"),
-        col("conv_id"), col("turn_idx"), col("start_off"), col("end_off"),
+        col("etype"), col("conv_id"), col("turn_idx"), col("start_off"), col("end_off"),
         col("conf"), col("link_target"))
 
   /** Surface-level kind column for surfClusters. Surface clusters are

@@ -34,17 +34,17 @@ object Justifications {
     * (membership carries its own constant `conf`, so only the keys are
     * kept and the mention-level conf is unambiguous).
     *
-    * PRUNED to the union of what the three consumers read (cluster_id,
-    * member_id, conv_id, turn_idx, span, conf, link_target): the
-    * mention name/norm_name strings — the widest columns on the row —
-    * never enter the persisted cache or its consumers' shuffles. */
+    * PRUNED to the union of what the consumers read (cluster_id,
+    * member_id, etype, conv_id, turn_idx, span, conf, link_target):
+    * the mention name/norm_name strings — the widest columns on the
+    * row — never enter the persisted cache or its consumers' shuffles. */
   def annotatedMembers(memberships: Dataset[Membership],
       mentions: Dataset[Mention]): DataFrame =
     memberships.toDF().select(col("cluster_id"), col("member_id"))
       // merge hint: both sides corpus-scale, never broadcastable
       // (checkpoint stats undercount — see graft.superedge.SuperEdges)
       .join(mentions.toDF().withColumnRenamed("mention_id", "member_id")
-        .select(col("member_id"), col("conv_id"), col("turn_idx"),
+        .select(col("member_id"), col("etype"), col("conv_id"), col("turn_idx"),
           col("start_off"), col("end_off"), col("conf"), col("link_target"))
         .hint("merge"),
         "member_id")
@@ -124,10 +124,8 @@ object Justifications {
   def prototypeJustificationsFrom(annotated: DataFrame,
       prototypes: Dataset[Prototype],
       broadcastProtos: Boolean = false): DataFrame = {
-    val p = prototypes.toDF().select(col("cluster_id"), col("prototype_id"))
     annotated
-      .join(if (broadcastProtos) broadcast(p) else p,
-        "cluster_id")
+      .join(protoIds(prototypes, broadcastProtos), "cluster_id")
       .select(col("prototype_id"), col("cluster_id"), col("member_id"),
         col("conv_id"), col("turn_idx"), col("start_off"), col("end_off"),
         col("conf"))
@@ -138,9 +136,16 @@ object Justifications {
     * justification (A3) keyed by the prototype. */
   def prototypeInformativeJustifications(memberships: Dataset[Membership],
       mentions: Dataset[Mention], prototypes: Dataset[Prototype]): DataFrame =
-    informativeJustifications(memberships, mentions)
-      .join(prototypes.toDF().select(col("cluster_id"), col("prototype_id")),
-        "cluster_id")
+    prototypeInformativeJustificationsFrom(
+      informativeJustifications(memberships, mentions), prototypes)
+
+  /** [[prototypeInformativeJustifications]] over the A3 rows
+    * ([[informativeJustificationsFrom]]); `broadcastProtos` as in
+    * [[prototypeJustificationsFrom]]. */
+  def prototypeInformativeJustificationsFrom(informative: DataFrame,
+      prototypes: Dataset[Prototype], broadcastProtos: Boolean = false): DataFrame =
+    informative
+      .join(protoIds(prototypes, broadcastProtos), "cluster_id")
       .select(col("prototype_id"), col("cluster_id"), col("conv_id"),
         col("member_id"), col("turn_idx"), col("start_off"), col("end_off"),
         col("conf"))
@@ -152,16 +157,24 @@ object Justifications {
     * mention's type assertion is its (etype, span) pair. */
   def prototypeTypeAssertionJustifications(memberships: Dataset[Membership],
       mentions: Dataset[Mention], prototypes: Dataset[Prototype]): DataFrame =
-    memberships.toDF().select(col("cluster_id"), col("member_id"))
-      .join(mentions.toDF().withColumnRenamed("mention_id", "member_id")
-        .select(col("member_id"), col("etype"), col("conv_id"),
-          col("turn_idx"), col("start_off"), col("end_off"))
-        .hint("merge"), "member_id")
-      .join(prototypes.toDF().select(col("cluster_id"), col("prototype_id")),
-        "cluster_id")
+    prototypeTypeAssertionJustificationsFrom(
+      annotatedMembers(memberships, mentions), prototypes)
+
+  /** [[prototypeTypeAssertionJustifications]] over a precomputed
+    * [[annotatedMembers]] join; `broadcastProtos` as in
+    * [[prototypeJustificationsFrom]]. */
+  def prototypeTypeAssertionJustificationsFrom(annotated: DataFrame,
+      prototypes: Dataset[Prototype], broadcastProtos: Boolean = false): DataFrame =
+    annotated
+      .join(protoIds(prototypes, broadcastProtos), "cluster_id")
       .select(col("prototype_id"), col("cluster_id"), col("etype"),
         col("member_id"), col("conv_id"), col("turn_idx"),
         col("start_off"), col("end_off"))
+
+  private def protoIds(prototypes: Dataset[Prototype], broadcastProtos: Boolean): DataFrame = {
+    val p = prototypes.toDF().select(col("cluster_id"), col("prototype_id"))
+    if (broadcastProtos) broadcast(p) else p
+  }
 
   /** Superedge justification copy — `super_edge_justif`
     * (update_kg/sparqls.py:509-527): each superedge carries the

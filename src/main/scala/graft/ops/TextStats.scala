@@ -60,15 +60,16 @@ object TextStats {
     * ONE native kernel call per row (graft_langid, round 6): the
     * length-minus-replace chain allocated 16 intermediate strings per
     * row; the kernel counts the same non-overlapping occurrences with
-    * zero allocation. Values identical (parity test + oracle). */
+    * zero allocation. Values identical (parity test + oracle). NULL
+    * text is the empty document: no stopword hits → 'en'. */
   def langId(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),
-      call_function("graft_langid", col("text")).as("pred_lang"))
+      call_function("graft_langid", coalesce(col("text"), lit(""))).as("pred_lang"))
 
   /** The pre-round-6 Column formulation of [[langId]] — retained as
     * the parity comparator for the kernel (OpsSpec). */
   private[graft] def langIdColumnar(docs: DataFrame): DataFrame = {
-    val padded = concat(lit(" "), lower(col("text")), lit(" "))
+    val padded = concat(lit(" "), lower(coalesce(col("text"), lit(""))), lit(" "))
     val scores = langStopwords.toSeq.sortBy(_._1).map { case (lang, needles) =>
       val s = needles.map(occurrences(padded, _)).reduce(_ + _)
       struct(s.as("score"), lit(lang).as("lang"))

@@ -112,17 +112,7 @@ class SnapshotStore(val root: String) {
   }
 
   /** Latest snapshot id of a stage, if any. */
-  def current(stage: String): Option[Long] = {
-    val pat = s""""stage":"${esc(stage)}","snapshot":""".r
-    readManifest()
-      .filter(_.contains(s""""stage":"${esc(stage)}""""))
-      .flatMap { e =>
-        val k = e.indexOf("\"snapshot\":")
-        if (k < 0) None
-        else Some(e.substring(k + 11).takeWhile(_.isDigit).toLong)
-      }
-      .sorted.lastOption
-  }
+  def current(stage: String): Option[Long] = snapshots(stage).lastOption
 
   /** Fingerprint the latest snapshot of a stage was written under
     * (pre-fingerprint manifests report ""). */

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.DataStreamWriter
 
-import graft.Main
+import graft.{Main, Materializer, Pipeline}
 import graft.link.Linker
 import graft.schema.Turn
 import graft.snapshot.SnapshotStore
@@ -23,8 +23,9 @@ import graft.snapshot.SnapshotStore
  *  3. rebuilds the cluster layer (surfaces → CC → memberships →
  *     prototypes → superedges → triples → event/relation/
  *     justification outputs) over the ACCUMULATED compact KE rows via
- *     the SAME [[Main.kgStages]] the batch CLI runs, snapshotting
- *     every stage with a fingerprint keyed to the log head.
+ *     the SAME stage DAG the batch CLI runs ([[graft.Pipeline.build]]
+ *     over [[graft.Materializer.Snapshot]]), snapshotting every stage
+ *     with a fingerprint keyed to the log head.
  *
  * Clustering is a global fixpoint (a new mention can merge two old
  * clusters), so the cluster layer recomputes over the accumulated KE
@@ -72,7 +73,8 @@ object IncrementalKg {
         // accumulated KEs; an idempotent re-fire leaves the head
         // unchanged → every stage resumes from its snapshot
         val fp = s"$baseFp|ke_log=${store.current("ke_log").getOrElse(0L)}"
-        Main.kgStages(spark, ke, store, fp, linkCfg)
+        Pipeline.build(ke, new Materializer.Snapshot(spark, store, fp), linkCfg)
+          .unpersist()
         // storage stays O(corpus), not O(batches × KG): every downstream
         // stage just wrote a fresh snapshot under the new log-head
         // fingerprint, so the previous batch's full-KG copies are

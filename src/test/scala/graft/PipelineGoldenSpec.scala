@@ -29,6 +29,25 @@ class PipelineGoldenSpec extends AnyFunSuite {
     assert(recall >= 0.95, f"recall $recall%.4f < 0.95")
   }
 
+  test("prototype_id and kind are constant per cluster on golden corpus") {
+    import org.apache.spark.sql.functions._
+    // Canonicalizer.prototypes aggregates both with max(...) instead of
+    // grouping by them; that is only exact while every dictionary row
+    // of a cluster carries the same value
+    val cfg = TranscriptSynth.Config(nConvs = 400, turnsPerConv = 10)
+    val r = Pipeline.run(TranscriptSynth.turnsDs(spark, cfg, partitions = 8))
+    val perCluster = r.surfaceClusters.groupBy(col("cluster_id"))
+      .agg(countDistinct(col("prototype_id")).as("np"), countDistinct(col("kind")).as("nk"))
+    assert(perCluster.count() > 0)
+    assert(perCluster.filter(col("np") =!= 1 || col("nk") =!= 1).count() == 0)
+    // one prototype row per cluster, whose id and kind are the dictionary's
+    val dict = r.surfaceClusters.select("cluster_id", "prototype_id", "kind").distinct()
+    val protos = r.prototypes.toDF().select("cluster_id", "prototype_id", "kind")
+    assert(protos.count() == perCluster.count())
+    assert(protos.exceptAll(dict).count() == 0)
+    r.unpersist()
+  }
+
   test("golden enumerations are mutually consistent (pure, no Spark)") {
     val cfg = TranscriptSynth.Config(nConvs = 60, turnsPerConv = 8)
     val triples = TranscriptSynth.goldenTriples(cfg)

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -48,5 +49,17 @@ class SkewSpec extends AnyFunSuite {
     assert(a == b) // path switch is invisible in the output
     // and downstream triples are identical through either path
     assert(plain.triples.collect().toSet == forced.triples.collect().toSet)
+    // as is every other output: events, relation clusters and every
+    // justification/link output, named as the snapshot stages are
+    def outputs(r: Pipeline.Result) = r.stageFrames ++ Seq(
+      "event_memberships" -> r.eventMemberships.toDF(),
+      "annotated_members" -> r.annotatedMembers)
+    def rows(df: DataFrame) = df.collect().groupBy(identity).map { case (k, v) => k -> v.length }
+    for (((name, a), (_, b)) <- outputs(plain).zip(outputs(forced))) {
+      val same = rows(a) == rows(b)
+      assert(same, s"$name differs between the broadcast and salted paths")
+    }
+    plain.unpersist()
+    forced.unpersist()
   }
 }
