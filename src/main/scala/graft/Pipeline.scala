@@ -176,9 +176,9 @@ object Pipeline {
     val edges = mat.stage("match_edges", checkpointed = true) {
       Linker.matchEdgesFrom(surf, linkCfg).toDF() }
     val comp = mat.stage("components", checkpointed = true) {
-      ConnectedComponents.run(edges) }
+      ConnectedComponents.run(edges, localEdges = linkCfg.driverLocalRows) }
     // the edge list's checkpoint blocks are dead once CC has consumed
-    // them (CC's first round materialized the symmetric copy); its
+    // them (collected them, or materialized its symmetric copy); its
     // truncated plan holds no other frame's blocks, so this frees only
     // the edges themselves
     graft.util.Blocks.release(edges)

@@ -35,9 +35,10 @@ class LifecycleSpec extends AnyFunSuite {
     import spark.implicits._
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
-    // a path graph forces several pointer-jumping rounds
+    // a path graph forces several pointer-jumping rounds (gate 0: the
+    // distributed branch; the default one runs no round)
     val edges = (0L until 40L).map(i => (i, i + 1)).toDF("src", "dst")
-    val labels = graft.cc.ConnectedComponents.run(edges)
+    val labels = graft.cc.ConnectedComponents.run(edges, localEdges = 0L)
     assert(labels.select("component").distinct().count() == 1)
     val pinned = sc.getPersistentRDDs.keySet -- before
     // exactly the returned labels' checkpoint may remain pinned —
@@ -45,6 +46,15 @@ class LifecycleSpec extends AnyFunSuite {
     assert(pinned.size <= 1,
       s"CC leaked intermediate round blocks: ids=${pinned.toSeq.sorted}")
     graft.util.Blocks.release(labels)
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty)
+    // the driver-local branch pins at most its result's checkpoint
+    // (the persisted input is released on return)
+    val local = graft.cc.ConnectedComponents.run(edges)
+    assert(local.select("component").distinct().count() == 1)
+    val localPinned = sc.getPersistentRDDs.keySet -- before
+    assert(localPinned.size <= 1,
+      s"local CC left more than its result pinned: ids=${localPinned.toSeq.sorted}")
+    graft.util.Blocks.release(local)
     assert((sc.getPersistentRDDs.keySet -- before).isEmpty)
   }
 
